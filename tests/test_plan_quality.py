@@ -3,6 +3,8 @@
 These tests read ``explain(formatted)`` output and pin:
 - parquet column pruning (ReadSchema carries only needed columns)
 - predicate pushdown (PushedFilters non-empty for point lookups)
+- the query API's key lookups: get_trace's equality reaches the cached
+  spans scan; names and autocomplete lookups collect with no Spark job
 - top-k compiles to TakeOrderedAndProject (no global sort)
 - the 1-row query side of ANN joins is broadcast
 - whole-stage codegen covers the aggregation pipeline
@@ -11,6 +13,7 @@ These tests read ``explain(formatted)`` output and pin:
 from __future__ import annotations
 
 import io
+import uuid
 from contextlib import redirect_stdout
 
 import pytest
@@ -19,14 +22,19 @@ from pyspark.sql import functions as F
 
 from zipkin_storage_kafka_spark.operators import trace_summaries
 from zipkin_storage_kafka_spark.operators.similarity import cosine_topk
-from zipkin_storage_kafka_spark.sources.spans import spans_from_events
+from zipkin_storage_kafka_spark.plans.query_api import SpanStore
+from zipkin_storage_kafka_spark.sources.spans import (
+    spans_from_events,
+    spans_table,
+    spans_with_nested,
+)
 from zipkin_storage_kafka_spark.sources.tables import load_table
 
 
-def _plan(df) -> str:
+def _plan(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
 
 
@@ -45,6 +53,81 @@ def test_predicate_pushdown_on_point_lookup(spark, sf_dir):
     plan = _plan(df)
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l][0]
     assert "user_id" in pushed and "7" in pushed
+
+
+def test_get_trace_equality_reaches_cached_scan(spark, sf_dir):
+    """Only the argument is normalized: the stored trace_id is compared to
+    a literal, which the in-memory scan takes as a predicate."""
+    spans = spans_table(spark, sf_dir)
+    tid = spans.select("trace_id").first()[0]
+    df = SpanStore(spans).get_trace(tid.upper().lstrip("0"))
+    plan = _plan(df, "simple")  # one line per node, with its arguments
+    scan = [l for l in plan.splitlines() if "InMemoryTableScan" in l][0]
+    assert f"= {tid})]" in scan, scan  # in the scan's predicate list
+    assert "lpad" not in plan and "lower(" not in plan, plan
+
+
+def _jobs_to_collect(df) -> tuple[int, list]:
+    """Spark jobs ``df.collect()`` runs (counted by job group) and its rows."""
+    sc = df.sparkSession.sparkContext
+    group = f"lookup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+
+def _key_lookups(store: SpanStore, service: str, key: str) -> dict:
+    return {
+        "service_names": lambda: store.get_service_names(),
+        "span_names": lambda: store.get_span_names(service),
+        "remote_service_names": lambda: store.get_remote_service_names(service),
+        "autocomplete_keys": lambda: store.get_autocomplete_keys(),
+        "autocomplete_values": lambda: store.get_autocomplete_values(key),
+    }
+
+
+@pytest.mark.parametrize(
+    "service,key,hit",
+    [("svc_1", "environment", True), ("no_such_svc", "none", False)],
+)
+def test_key_lookups_run_no_spark_job(spark, sf_dir, service, key, hit):
+    spans = spans_table(spark, sf_dir)
+    store = SpanStore(spans)
+    for name, lookup in _key_lookups(store, service, key).items():
+        lookup().collect()  # the first lookup may build the index
+        jobs, rows = _jobs_to_collect(lookup())
+        assert jobs == 0, name
+        # the two lookups without an argument answer even on a miss
+        keyless = name in ("service_names", "autocomplete_keys")
+        assert bool(rows) == (hit or keyless), name
+    # another store over the same relation shares its index
+    for name, lookup in _key_lookups(SpanStore(spans), service, key).items():
+        assert _jobs_to_collect(lookup())[0] == 0, name
+
+
+def test_empty_autocomplete_index_runs_no_spark_job(spark, sf_dir):
+    spans = spans_table(spark, sf_dir).filter(F.col("env").isNull())
+    store = SpanStore(spans, autocomplete_keys=("environment",))
+    for lookup in (
+        store.get_autocomplete_keys,
+        lambda: store.get_autocomplete_values("environment"),
+    ):
+        assert lookup().collect() == []
+        assert _jobs_to_collect(lookup()) == (0, [])
+
+
+def test_key_lookups_same_on_nested_shape(spark, sf_dir):
+    """The index builds from either span shape with the same answers."""
+    scalar = SpanStore(spans_table(spark, sf_dir))
+    nested = SpanStore(spans_with_nested(spark, sf_dir))
+    for service, key in (("svc_1", "environment"), ("svc_2", "k"), ("nope", "x")):
+        want = _key_lookups(scalar, service, key)
+        got = _key_lookups(nested, service, key)
+        for name in want:
+            assert got[name]().collect() == want[name]().collect(), name
 
 
 def test_topk_is_take_ordered(spark, sf_dir):

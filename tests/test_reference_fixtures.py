@@ -17,7 +17,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from zipkin_storage_kafka_spark.functions.zipkin import normalize_trace_id
+from zipkin_storage_kafka_spark.functions.zipkin import (
+    normalize_trace_id,
+    normalize_trace_id_str,
+)
 from zipkin_storage_kafka_spark.operators import (
     aggregate_traces,
     autocomplete_tags,
@@ -141,6 +144,21 @@ def test_get_traces_by_ids(fixture_spans):
     store = SpanStore(fixture_spans)
     got = store.get_traces_by_ids(["000000000000000a", "000000000000000b"])
     assert got.count() == 2
+    # ids are normalized (upper case, unpadded) and de-duplicated, the way
+    # get_trace finds them (KafkaSpanStore.java:84)
+    got = store.get_traces_by_ids(["A", "000000000000000a", "0B"])
+    assert sorted(r["trace_id"] for r in got.collect()) == [
+        "000000000000000a", "000000000000000b"
+    ]
+
+
+def test_get_trace_normalizes_argument(spark):
+    spans = spark.createDataFrame(
+        [_span("0000000000000abc", "1", 1_700_000_000 * MICROS)],
+        SPANS_STREAM_SCHEMA,
+    )
+    got = SpanStore(spans).get_trace("ABC").collect()
+    assert [r["trace_id"] for r in got] == ["0000000000000abc"]
 
 
 def test_normalize_trace_id(spark):
@@ -150,6 +168,13 @@ def test_normalize_trace_id(spark):
     vals = [r["n"] for r in df.collect()]
     assert vals[0] == "0" * 13 + "abc"
     assert vals[1] == "0" * 15 + "a" * 17
+
+
+def test_normalize_trace_id_str_matches_column_form(spark):
+    raw = ["ABC", "a" * 16, "F" * 17, "0" * 32, "1" * 33, "aB" * 8]
+    df = spark.createDataFrame([Row(t=t) for t in raw])
+    want = [r["n"] for r in df.select(normalize_trace_id("t").alias("n")).collect()]
+    assert [normalize_trace_id_str(t) for t in raw] == want
 
 
 def test_trace_merge_dedups_spans(spark):

@@ -27,6 +27,16 @@ def normalize_trace_id(col: Column | str) -> Column:
     return F.when(F.length(c) > 16, F.lpad(c, 32, "0")).otherwise(F.lpad(c, 16, "0"))
 
 
+def normalize_trace_id_str(trace_id: str) -> str:
+    """:func:`normalize_trace_id` for one id on the driver: a query
+    argument is normalized once here, so the plan compares the stored
+    (already normalized) column to a literal the scan can take.  Same
+    result as the Column form, including ``lpad``'s cut of longer input."""
+    c = trace_id.lower()
+    width = 32 if len(c) > 16 else 16
+    return c.rjust(width, "0")[:width]
+
+
 def link_key(parent: Column | str = "parent", child: Column | str = "child") -> Column:
     """``parent + ":" + child`` — the dependency-store key
     (reference DependencyLinkSerde.java:15-19)."""

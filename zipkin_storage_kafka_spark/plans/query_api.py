@@ -7,20 +7,35 @@ instances; in Spark the scatter-gather layer dissolves — each query is one
 DataFrame plan over the spans table (or the materialized index tables), and
 the driver/executor split IS the distribution (SURVEY section 3.3).
 
-Every function returns a DataFrame (lazy plan): filters reach the parquet
-scan via Catalyst pushdown, limits compile to TakeOrderedAndProject (top-k,
-no full sort), point lookups prune partitions when the table is partitioned
-by the key's time bucket.
+Every function returns a DataFrame.  Trace queries are lazy plans over the
+spans relation: filters reach the scan via Catalyst pushdown (``get_trace``
+compares the stored, already normalized ``trace_id`` to a literal, so the
+equality reaches ``InMemoryTableScan``), limits compile to
+TakeOrderedAndProject (top-k, no full sort), point lookups prune partitions
+when the table is partitioned by the key's time bucket.
+
+Name and autocomplete lookups read a driver-resident snapshot of the
+reference's name/tag stores instead (in-memory stores built at ingest,
+TraceStorageTopology.java:131-149): each store is aggregated once per spans
+relation, sorted, and kept as an Arrow-backed ``LocalRelation`` shared by
+every ``SpanStore`` over that relation.  A lookup is a filter/limit that
+Catalyst folds into the relation, so its ``collect()`` runs no Spark job.
+Like the reference's stores, the snapshot holds |services| x |names| rows
+plus the whitelisted tag values, and like the persisted spans it does not
+see rows added to the relation after it was built.
 """
 
 from __future__ import annotations
 
+import weakref
+from collections.abc import Callable, Hashable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from zipkin_storage_kafka_spark.functions.zipkin import normalize_trace_id
+from zipkin_storage_kafka_spark.functions.zipkin import normalize_trace_id_str
 from zipkin_storage_kafka_spark.operators import (
     autocomplete_tags,
     dependency_links,
@@ -30,6 +45,7 @@ from zipkin_storage_kafka_spark.operators import (
     span_names,
     trace_summaries,
 )
+from zipkin_storage_kafka_spark.operators.indexes import autocomplete_tags_nested
 from zipkin_storage_kafka_spark.operators.trace_aggregation import aggregate_traces
 
 # Result caps, mirroring the reference
@@ -70,6 +86,18 @@ class QueryRequest:
     limit: int = DEFAULT_QUERY_LIMIT
 
 
+def _endpoint_cols(columns: set[str]) -> tuple[Column, Column]:
+    """(local service, remote service) of either span shape: the endpoint
+    structs of the canonical nested shape (it has a ``tags`` map) or the
+    scalar columns of the flattened oracle-test projection."""
+    if "tags" in columns:
+        return (
+            F.col("local_endpoint.service_name"),
+            F.col("remote_endpoint.service_name"),
+        )
+    return F.col("local_service"), F.col("remote_service")
+
+
 def _span_matches(request: QueryRequest, columns: set[str]) -> F.Column:
     """Single-span conjunct of QueryRequest.test: service + span name +
     remote service + duration + annotation conditions must co-occur on ONE
@@ -86,10 +114,7 @@ def _span_matches(request: QueryRequest, columns: set[str]) -> F.Column:
     to their keys.
     """
     nested = "tags" in columns
-    svc = F.col("local_endpoint.service_name") if nested else F.col("local_service")
-    rsvc = (
-        F.col("remote_endpoint.service_name") if nested else F.col("remote_service")
-    )
+    svc, rsvc = _endpoint_cols(columns)
     cond = F.lit(True)
     if request.service_name:
         cond = cond & (svc == request.service_name)
@@ -124,12 +149,37 @@ def _span_matches(request: QueryRequest, columns: set[str]) -> F.Column:
     return cond
 
 
+def _local_relation(rows: pd.DataFrame, like: DataFrame) -> DataFrame:
+    """``rows`` on the driver as an Arrow-backed ``LocalRelation`` (Arrow is
+    on in ``session.get_spark``) with the schema of ``like``: a filter,
+    select or limit over it folds into a new ``LocalRelation``, so
+    collecting it runs no Spark job.  An empty pandas
+    frame would become a ``LogicalRDD`` (one job per collect), so an empty
+    relation is a one-row frame under ``limit(0)``, which Catalyst folds to
+    an empty ``LocalRelation``; the row is blank strings, the type of every
+    column of the name/tag stores."""
+    spark = like.sparkSession
+    if rows.empty:
+        blank = pd.DataFrame([[""] * len(like.columns)], columns=like.columns)
+        return spark.createDataFrame(blank, like.schema).limit(0)
+    return spark.createDataFrame(rows, like.schema)
+
+
+# One name/tag index per spans relation, shared by every SpanStore over it
+# and dropped with it: store name -> snapshot relation.
+_NAME_INDEXES: weakref.WeakKeyDictionary[DataFrame, dict] = (
+    weakref.WeakKeyDictionary()
+)
+
+
 class SpanStore:
     """Facade over a spans DataFrame, answering the reference's query API.
 
     Feature flags mirror the reference's enabled-flag short circuits
     (P5 — KafkaSpanStore.java:65-78,121-126): a disabled capability returns
-    an empty DataFrame with the right schema rather than raising.
+    an empty DataFrame with the right schema rather than raising.  Name and
+    autocomplete lookups read the spans relation's name/tag index (module
+    docstring), built on the first such lookup.
     """
 
     def __init__(
@@ -187,33 +237,70 @@ class SpanStore:
 
     # -- one trace (GET /traces/{id} — :243-266) --
     def get_trace(self, trace_id: str) -> DataFrame:
+        """Every ingest path stores normalized ids (``%016x`` in
+        ``spans_from_events``, ``normalize_trace_id`` in the JSON reader,
+        lowercase hex from the PROTO3 decoder), so only the argument is
+        normalized (KafkaSpanStore.java:75)."""
         if not self.trace_by_id_query_enabled:
             return self.spans.limit(0)
-        normalized = self.spans.withColumn(
-            "trace_id", normalize_trace_id(F.col("trace_id"))
-        )
-        return normalized.filter(
-            F.col("trace_id") == normalize_trace_id(F.lit(trace_id))
+        return self.spans.filter(
+            F.col("trace_id") == normalize_trace_id_str(trace_id)
         )
 
     # -- many traces (GET /traceMany — :268-290; id cap 1000 at :278) --
     def get_traces_by_ids(self, trace_ids: list[str]) -> DataFrame:
         if not self.trace_by_id_query_enabled:
             return aggregate_traces(self.spans).limit(0)
-        ids = trace_ids[:TRACE_MANY_LIMIT]
+        # normalized and de-duplicated as KafkaSpanStore.java:84 does
+        ids = list(
+            dict.fromkeys(
+                normalize_trace_id_str(t) for t in trace_ids[:TRACE_MANY_LIMIT]
+            )
+        )
         return aggregate_traces(self.spans.filter(F.col("trace_id").isin(ids)))
+
+    # -- the name/tag index (module docstring) --
+    def _indexed(self, name: Hashable, build: Callable[[], DataFrame]) -> DataFrame:
+        """The index's ``name`` store for ``self.spans``, built on first use
+        and sorted by its key column, so that requests only filter, select
+        or limit (an ``orderBy`` over a ``LocalRelation`` runs jobs)."""
+        stores = _NAME_INDEXES.setdefault(self.spans, {})
+        if name not in stores:
+            df = build()
+            rows = df.toPandas().sort_values(df.columns[0], ignore_index=True)
+            stores[name] = _local_relation(rows, df)
+        return stores[name]
+
+    def _names_view(self) -> DataFrame:
+        """The columns the name stores aggregate, from either span shape."""
+        svc, rsvc = _endpoint_cols(set(self.spans.columns))
+        return self.spans.select(
+            svc.alias("local_service"), rsvc.alias("remote_service"), "name"
+        )
+
+    def _autocomplete(self) -> DataFrame:
+        def build() -> DataFrame:
+            if "tags" in self.spans.columns:
+                return autocomplete_tags_nested(self.spans, self.autocomplete_keys)
+            return autocomplete_tags(self.spans, keys=self.autocomplete_keys)
+
+        return self._indexed(("autocomplete", self.autocomplete_keys), build)
 
     # -- names (GET /serviceNames... — :98-163) --
     def get_service_names(self) -> DataFrame:
-        return service_names(self.spans).orderBy("service_name").limit(NAMES_LIMIT)
+        return self._indexed(
+            "service_names", lambda: service_names(self._names_view())
+        ).limit(NAMES_LIMIT)
 
     def get_span_names(self, service_name: str) -> DataFrame:
-        return span_names(self.spans).filter(F.col("service_name") == service_name)
+        return self._indexed(
+            "span_names", lambda: span_names(self._names_view())
+        ).filter(F.col("service_name") == service_name)
 
     def get_remote_service_names(self, service_name: str) -> DataFrame:
-        return remote_service_names(self.spans).filter(
-            F.col("service_name") == service_name
-        )
+        return self._indexed(
+            "remote_service_names", lambda: remote_service_names(self._names_view())
+        ).filter(F.col("service_name") == service_name)
 
     # -- dependencies (GET /dependencies — :69-96) --
     def get_dependencies(self, end_ts: int, lookback: int) -> DataFrame:
@@ -238,17 +325,10 @@ class SpanStore:
 
     # -- autocomplete (GET /autocompleteTags... — :165-187,292-309) --
     def get_autocomplete_keys(self) -> DataFrame:
-        return (
-            autocomplete_tags(self.spans, keys=self.autocomplete_keys)
-            .select("tag_key")
-            .orderBy("tag_key")
-            .limit(AUTOCOMPLETE_LIMIT)
-        )
+        return self._autocomplete().select("tag_key").limit(AUTOCOMPLETE_LIMIT)
 
     def get_autocomplete_values(self, key: str) -> DataFrame:
-        return autocomplete_tags(self.spans, keys=self.autocomplete_keys).filter(
-            F.col("tag_key") == key
-        )
+        return self._autocomplete().filter(F.col("tag_key") == key)
 
     # -- instances metadata (GET /instances — KafkaStorageHttpService.java:
     #    311-326).  The scatter-gather topology dissolves in Spark; the

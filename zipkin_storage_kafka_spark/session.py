@@ -39,14 +39,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    # Per-process conf overrides for measurement experiments (r14: the
-    # in-bench Arrow premium knob sweep): "k=v;k2=v2".  Env-injected so a
-    # full bench session can vary one knob without a code fork.
-    for item in filter(
-        None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")
-    ):
-        k, _, v = item.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
