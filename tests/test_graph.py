@@ -66,15 +66,15 @@ def test_span_depths_deep_chain_log_sweeps(spark):
         span_depths,
     )
 
-    # depth 40 chain converges well inside max_sweeps (pointer doubling:
-    # covered distance doubles per sweep -> ~6 sweeps, not 40)
+    # depth 40 chain: ancestor pointers double per round inside the
+    # trace's array -> 6 rounds, not 40
     rows = [("t", "n0", None)] + [
         ("t", f"n{i}", f"n{i-1}") for i in range(1, 41)
     ]
     spans = spark.createDataFrame(
         rows, "trace_id string, id string, parent_id string"
     )
-    got = {r["id"]: r["depth"] for r in span_depths(spans, max_sweeps=8).collect()}
+    got = {r["id"]: r["depth"] for r in span_depths(spans).collect()}
     assert got[f"n40"] == 40 and got["n0"] == 0 and len(got) == 41
 
 

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import ast
 import io
 import os
 from contextlib import redirect_stdout
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -334,6 +336,53 @@ def test_matcache_fingerprint_invalidation_contract(
     assert fp2 != fp1
     assert matcache.materialized(spark, src, "t", fp2, build).count() == 3
     assert len(builds) == 2
+
+
+def _package_imports(pkg_dir: Path, name: str) -> set[str]:
+    """Package modules (dotted, package-relative) that module ``name``
+    imports at module level, read from its source with ``ast``."""
+    pkg = pkg_dir.name
+    rel = pkg_dir / name.replace(".", "/")
+    src = rel.with_suffix(".py") if rel.with_suffix(".py").is_file() else rel / "__init__.py"
+    found = set()
+    for node in ast.parse(src.read_text()).body:
+        if isinstance(node, ast.Import):
+            dotted = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = [pkg] + name.split(".")[: -node.level]
+                base = ".".join(parent + ([base] if base else []))
+            dotted = [base] + [f"{base}.{a.name}" for a in node.names]
+        else:
+            continue
+        for d in dotted:
+            if not d.startswith(pkg + "."):
+                continue
+            mod = d[len(pkg) + 1:]
+            path = pkg_dir / mod.replace(".", "/")
+            if path.with_suffix(".py").is_file() or (path / "__init__.py").is_file():
+                found.add(mod)
+    return found
+
+
+def test_span_store_fingerprint_covers_its_import_closure():
+    """matcache promises that a stale read is impossible, so the span
+    stores' fingerprint must list every package module that its modules
+    import at module level, transitively: an edit to any of them changes
+    what the stores hold."""
+    import zipkin_storage_kafka_spark
+    from zipkin_storage_kafka_spark.sources.spans import FINGERPRINT_MODULES
+
+    pkg_dir = Path(zipkin_storage_kafka_spark.__file__).parent
+    listed = set(FINGERPRINT_MODULES)
+    missing = {
+        (name, dep)
+        for name in listed
+        for dep in _package_imports(pkg_dir, name)
+        if dep not in listed
+    }
+    assert not missing, missing
 
 
 def test_pq_and_semdedup_caches_keyed_on_operator_source(

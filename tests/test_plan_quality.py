@@ -5,6 +5,7 @@ These tests read ``explain(formatted)`` output and pin:
 - predicate pushdown (PushedFilters non-empty for point lookups)
 - the query API's key lookups: get_trace's equality reaches the cached
   spans scan; names and autocomplete lookups collect with no Spark job
+- the span tree runs the same jobs whatever the trace depth
 - top-k compiles to TakeOrderedAndProject (no global sort)
 - the 1-row query side of ANN joins is broadcast
 - whole-stage codegen covers the aggregation pipeline
@@ -13,7 +14,9 @@ These tests read ``explain(formatted)`` output and pin:
 from __future__ import annotations
 
 import io
+import random
 import uuid
+from collections import defaultdict
 from contextlib import redirect_stdout
 
 import pytest
@@ -22,6 +25,7 @@ from pyspark.sql import functions as F
 
 from zipkin_storage_kafka_spark.operators import trace_summaries
 from zipkin_storage_kafka_spark.operators.similarity import cosine_topk
+from zipkin_storage_kafka_spark.operators.trace_aggregation import span_tree
 from zipkin_storage_kafka_spark.plans.query_api import SpanStore
 from zipkin_storage_kafka_spark.sources.spans import (
     spans_from_events,
@@ -128,6 +132,70 @@ def test_key_lookups_same_on_nested_shape(spark, sf_dir):
         got = _key_lookups(nested, service, key)
         for name in want:
             assert got[name]().collect() == want[name]().collect(), name
+
+
+_TREE_SCHEMA = (
+    "trace_id string, id string, parent_id string, duration long,"
+    " local_service string"
+)
+
+
+def _chain(trace_id: str, n: int) -> list[tuple]:
+    return [(trace_id, "n0", None, 1, "s0")] + [
+        (trace_id, f"n{i}", f"n{i - 1}", 1, f"s{i % 3}") for i in range(1, n)
+    ]
+
+
+def test_span_tree_jobs_independent_of_depth(spark):
+    """Ancestor pointers double inside each trace's array, so a 64-deep
+    chain runs the jobs a 2-span trace runs: no job per doubling round.
+    AQE is off because its re-planning, which runs as each shuffle stage
+    finishes, makes the job count of one input vary between runs."""
+    jobs = {}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for n in (2, 65):
+            df = spark.createDataFrame(_chain("t", n), _TREE_SCHEMA)
+            jobs[n], rows = _jobs_to_collect(span_tree(df))
+            assert max(r["depth"] for r in rows) == n - 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert jobs[2] == jobs[65], jobs
+
+
+def _walk(rows: list[tuple]) -> dict:
+    """Plain-Python reference: (trace_id, id) -> (depth, path_cost,
+    root_path), descending from the roots like the recursive-CTE oracles."""
+    kids, out, todo = defaultdict(list), {}, []
+    for trace_id, id_, parent, dur, svc in rows:
+        if parent is None:
+            out[trace_id, id_] = (0, dur, svc)
+            todo.append((trace_id, id_))
+        else:
+            kids[trace_id, parent].append((id_, dur, svc))
+    while todo:
+        trace_id, id_ = todo.pop()
+        depth, cost, path = out[trace_id, id_]
+        for kid, dur, svc in kids[trace_id, id_]:
+            out[trace_id, kid] = (depth + 1, cost + dur, f"{path}>{svc}")
+            todo.append((trace_id, kid))
+    return out
+
+
+def test_span_tree_stress_matches_python_walk(spark):
+    """A 20k-span random recursive tree plus a 1,000-deep chain: one task
+    holds each whole trace, and every column matches a plain walk."""
+    rng = random.Random(11)
+    rows = [("big", "n0", None, 3, "s0")] + [
+        ("big", f"n{i}", f"n{rng.randrange(i)}", rng.randrange(100), f"s{i % 5}")
+        for i in range(1, 20_000)
+    ] + _chain("deep", 1_000)
+    df = spark.createDataFrame(rows, _TREE_SCHEMA)
+    got = {
+        (r["trace_id"], r["id"]): (r["depth"], r["path_cost"], r["root_path"])
+        for r in span_tree(df).collect()
+    }
+    assert got == _walk(rows)
 
 
 def test_topk_is_take_ordered(spark, sf_dir):

@@ -4,6 +4,8 @@ round's new operators."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -86,6 +88,59 @@ def test_root_paths_null_service_propagates(spark):
         ("t", "m"): None,
         ("t", "l"): None,
     }
+
+
+# (trace_id, id, parent_id, duration): the rooted chain a -> b next to
+# spans no root reaches, in the same trace.
+_UNROOTED = {
+    "self_parent": [("t", "x", "x", 3)],
+    "even_cycle": [("t", "c", "d", 3), ("t", "d", "c", 4)],
+    "odd_cycle": [("t", "c", "e", 3), ("t", "d", "c", 4), ("t", "e", "d", 5)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UNROOTED))
+def test_depths_and_costs_drop_unrooted_spans(spark, case):
+    """Self-parent and cyclic spans never reach a root: depth and path
+    cost drop them, as the root path and the recursive-CTE oracles do,
+    instead of reporting the hops a pointer walk ran up around the loop."""
+    from zipkin_storage_kafka_spark.operators.trace_aggregation import (
+        span_depths,
+        span_path_costs,
+    )
+
+    rows = [("t", "a", None, 1), ("t", "b", "a", 2)] + _UNROOTED[case]
+    df = spark.createDataFrame(
+        rows, "trace_id string, id string, parent_id string, duration long"
+    )
+    depths = {(r["trace_id"], r["id"]): r["depth"] for r in span_depths(df).collect()}
+    costs = {
+        (r["trace_id"], r["id"]): (r["path_cost"], r["depth"])
+        for r in span_path_costs(df).collect()
+    }
+    assert depths == {("t", "a"): 0, ("t", "b"): 1}
+    assert costs == {("t", "a"): (1, 0), ("t", "b"): (3, 1)}
+
+
+def test_span_tree_repeated_span_id_fails_naming_trace(spark):
+    """The tree walk indexes spans by (trace_id, id); a trace that repeats
+    an id (zipkin2's shared client/server halves) must fail loudly, not
+    fan out or vanish."""
+    from zipkin_storage_kafka_spark.operators.trace_aggregation import (
+        span_tree,
+    )
+
+    df = spark.createDataFrame(
+        [
+            Row(trace_id="ok", id="a", parent_id=None, local_service="s"),
+            Row(trace_id="shared7", id="a", parent_id=None, local_service="c"),
+            Row(trace_id="shared7", id="a", parent_id=None, local_service="s"),
+            Row(trace_id="shared7", id="b", parent_id="a", local_service="s"),
+        ],
+        _SPAN_SCHEMA,
+    )
+    with pytest.raises(PySparkException, match="repeats within trace shared7"):
+        span_tree(df, cost=False).collect()
 
 
 def test_link_window_diff_error_shift_is_changed(spark):

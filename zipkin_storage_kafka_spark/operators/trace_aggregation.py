@@ -118,67 +118,138 @@ def trace_summaries(spans: DataFrame) -> DataFrame:
     )
 
 
-def span_depths(spans: DataFrame, max_sweeps: int = 20) -> DataFrame:
-    """Per-span depth in the trace tree (root = 0) by pointer doubling.
+def span_tree(
+    spans: DataFrame, cost: bool = True, path: bool = True
+) -> DataFrame:
+    """Each span's place in its trace's tree — depth (root = 0), path
+    cost and root path — built in one trace-local pass, the batch form of
+    the reference's in-memory span tree (zipkin2.internal.SpanNode, built
+    per trace at KafkaStorageHttpService.java:86).
 
-    Each span tracks a known (ancestor, distance) pair, initialized to its
-    parent edge; every sweep substitutes the ancestor's own pair, DOUBLING
-    the covered distance — convergence in O(log max_depth) distributed
-    joins rather than the O(max_depth) of naive one-hop walking (the
-    reference's in-memory SpanNode tree construction at
-    zipkin2.internal.SpanNode walks pointers per trace; at 100 TB the
-    per-trace walk becomes this log-round join).  Roots map to themselves
-    at distance 0, so the sweep join is total and the driver reads one
-    scalar (sum of distances, non-decreasing, capped by the fixpoint) per
-    sweep to stop.
+    Plan: one ``trace_id`` shuffle numbers each span within its trace
+    (``row_number`` over ``id``); a trace-qualified left join gives each
+    span its parent's number; each trace's spans are then collected into
+    one array ordered by that number.  Inside the array, ancestor pointers
+    double for ceil(log2(n)) rounds (n = the trace's span count, so
+    2^rounds covers the deepest possible chain).  Array reads are O(1), so
+    there is no driver loop, no per-round job and no convergence scalar.
 
-    Every sweep join is qualified by ``trace_id``: zipkin2 span ids are
-    unique only *within* a trace (64-bit random — cross-trace collisions
-    are a birthday-bound certainty at 100 TB span volumes), and the
-    reference builds its SpanNode tree strictly per trace.  The extra key
-    also co-partitions the sweep with every other trace-keyed stage.
-    Returns: trace_id, id, depth.
+    State per span: its ancestor ``anc`` and what the half-open chain
+    (anc, span] holds — ``dist`` hops, ``w`` summed durations (NULL counts
+    0), ``acc`` the '>'-prefixed services.  A round composes each chain
+    with its ancestor's; a root is its own ancestor with an empty chain.
+    At the end, the ancestor's own duration and service close the chain.
+
+    A span is kept only if its final ancestor is a root (NULL
+    parent_id).  So orphans (parent id absent from the trace), self-parents
+    and cycles drop out of every column, as in the recursive-CTE oracles
+    that descend from the roots.  A chain longer than n - 1 hops is on or
+    behind a cycle; its ``acc`` is cleared, so no span holds more than the
+    n - 1 names a well-formed chain can.  A NULL local_service on the path
+    makes the whole root_path NULL, as the oracle's ``||`` does.
+
+    Contract: ``(trace_id, id)`` names one span.  A trace that repeats a
+    span id (zipkin2's shared client/server halves) fails the build with
+    an error naming the trace; zipkin2's rule that makes the server half a
+    child of the client half is the way to lift this.
+
+    ``cost`` needs a ``duration`` column, ``path`` a ``local_service``
+    column; each adds its state and output column only when asked.
+
+    Scale: one task holds one whole trace — O(spans) memory for depth and
+    cost, O(spans x depth) service names for root paths, the size of that
+    trace's output.  Cross-trace parallelism is full.
+
+    Columns: trace_id, id, depth[, path_cost][, root_path].
     """
-    base = spans.select("trace_id", "id", "parent_id")
-    cur = base.select(
+    # Per-span state: (name, value for span x at index i before the first
+    # round, value after one doubling round over the previous state t).
+    state = [
+        ("anc", "coalesce(x.pidx, i)", "t.anc[t.anc[i]]"),
+        ("dist", "IF(x.pidx IS NULL, 0L, 1L)", "t.dist[i] + t.dist[t.anc[i]]"),
+    ]
+    out = [("depth", "t.dist[i]")]
+    carried = {}  # span columns the state reads, by struct field name
+    if cost:
+        carried["dur"] = F.coalesce(F.col("duration"), F.lit(0)).cast("long")
+        state.append(
+            ("w", "IF(x.pidx IS NULL, 0L, x.dur)", "t.w[i] + t.w[t.anc[i]]")
+        )
+        out.append(("path_cost", "t.w[i] + s[t.anc[i]].dur"))
+    if path:
+        carried["svc"] = F.col("local_service")
+        state.append((
+            "acc",
+            "IF(x.pidx IS NULL, '', concat('>', x.svc))",
+            "IF(t.dist[i] + t.dist[t.anc[i]] >= size(s), '',"
+            " concat(t.acc[t.anc[i]], t.acc[i]))",
+        ))
+        out.append(("root_path", "concat(s[t.anc[i]].svc, t.acc[i])"))
+
+    w = Window.partitionBy("trace_id").orderBy("id")
+    nodes = spans.select(
         "trace_id",
         "id",
-        F.coalesce("parent_id", "id").alias("anc"),
-        F.when(F.col("parent_id").isNotNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("dist"),
-    ).localCheckpoint(eager=False)  # truncate lineage: Catalyst must not re-optimize
-    # the upstream spans derivation once per sweep (see connected_components
-    # for the measured planning-time effect).
-    prev_sum = cur.agg(F.sum("dist")).collect()[0][0] or 0
-    for _ in range(max_sweeps):
-        look = cur.select(
-            F.col("trace_id").alias("_tid"),
-            F.col("id").alias("_aid"),
-            F.col("anc").alias("_anc2"),
-            F.col("dist").alias("_d2"),
+        "parent_id",
+        *[c.alias(n) for n, c in carried.items()],
+        (F.row_number().over(w) - 1).alias("idx"),
+        (F.lag("id").over(w) == F.col("id")).alias("dup"),
+    )
+    parents = nodes.select(
+        F.col("trace_id").alias("_ptid"),
+        F.col("id").alias("_pid"),
+        F.col("idx").alias("pidx"),
+    )
+    trees = (
+        nodes.join(
+            parents,
+            (F.col("trace_id") == F.col("_ptid"))
+            & (F.col("parent_id") == F.col("_pid")),
+            "left",
         )
-        nxt = (
-            cur.join(
-                look,
-                (F.col("anc") == F.col("_aid"))
-                & (F.col("trace_id") == F.col("_tid")),
-            )
-            .select(
-                "trace_id",
-                "id",
-                F.col("_anc2").alias("anc"),
-                (F.col("dist") + F.col("_d2")).alias("dist"),
-            )
-            .localCheckpoint(eager=False)
+        .groupBy("trace_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        "idx",
+                        "pidx",
+                        F.col("parent_id").isNull().alias("root"),
+                        "id",
+                        *carried,
+                    )
+                )
+            ).alias("s"),
+            F.max("dup").alias("dup"),
         )
-        cur_sum = nxt.agg(F.sum("dist")).collect()[0][0] or 0
-        cur = nxt
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return cur.select("trace_id", "id", F.col("dist").alias("depth"))
+    )
+    init = ", ".join(f"'{n}', transform(s, (x, i) -> {e})" for n, e, _ in state)
+    step = ", ".join(f"'{n}', transform(t.{n}, (v, i) -> {e})" for n, _, e in state)
+    read = ", ".join(f"'{n}', {e}" for n, e in out)
+    # The read-out stays in aggregate's finish lambda: read from a later
+    # projection, the aggregate is inlined and evaluated once per field.
+    walk = f"""
+        CASE WHEN dup THEN raise_error(concat(
+            'span_tree: a span id repeats within trace ', trace_id))
+        ELSE aggregate(
+            array_repeat(0, CAST(ceil(log2(size(s))) AS INT)),
+            named_struct({init}),
+            (t, r) -> named_struct({step}),
+            t -> filter(
+                transform(s, (x, i) -> named_struct(
+                    'id', x.id, 'keep', s[t.anc[i]].root, {read})),
+                y -> y.keep))
+        END
+    """
+    return trees.selectExpr("trace_id", f"inline({walk})").select(
+        "trace_id", "id", *[n for n, _ in out]
+    )
+
+
+def span_depths(spans: DataFrame) -> DataFrame:
+    """Per-span depth in the trace tree (root = 0); see :func:`span_tree`.
+    Needs only trace_id, id and parent_id.  Returns: trace_id, id, depth."""
+    return span_tree(spans, cost=False, path=False)
 
 
 def depth_histogram(spans: DataFrame) -> DataFrame:
@@ -191,87 +262,12 @@ def depth_histogram(spans: DataFrame) -> DataFrame:
     )
 
 
-def span_path_costs(spans: DataFrame, max_sweeps: int = 20) -> DataFrame:
-    """Root-to-span path cost (sum of span durations along the ancestry,
-    endpoints inclusive) by the same pointer-doubling sweep as
-    ``span_depths`` — O(log max_depth) distributed joins.
-
-    State per span: (anc, dist, w) where ``w`` sums durations over the
-    half-open chain [self, anc) — each sweep composes two disjoint chain
-    segments, so ``w`` doubles its coverage per join.  The fixpoint test
-    rides on ``dist`` (strictly +1 per hop), never on ``w``: zero-duration
-    spans would make a w-based test stop early with ancestors short of the
-    root.  At the fixpoint every anc is its root; one final join fetches the
-    root's own duration to close the half-open sum.  Spans whose parent id
-    does not resolve (orphans) drop out of the sweep join — matching the
-    recursive-CTE oracle, which never reaches them from a root.
-
-    Downstream of the reference's in-memory span tree
-    (zipkin2.internal.SpanNode; built per trace at
-    KafkaStorageHttpService.java:86) — the per-trace pointer walk becomes a
-    log-round join at 100 TB.  Returns: trace_id, id, path_cost.
-    """
-    base = spans.select(
-        "trace_id",
-        "id",
-        "parent_id",
-        F.coalesce(F.col("duration"), F.lit(0)).cast("long").alias("dur"),
-    )
-    cur = base.select(
-        "trace_id",
-        "id",
-        F.coalesce("parent_id", "id").alias("anc"),
-        F.when(F.col("parent_id").isNotNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("dist"),
-        F.when(F.col("parent_id").isNotNull(), F.col("dur"))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("w"),
-    ).localCheckpoint(eager=False)
-    prev_sum = cur.agg(F.sum("dist")).collect()[0][0] or 0
-    for _ in range(max_sweeps):
-        look = cur.select(
-            F.col("trace_id").alias("_tid"),
-            F.col("id").alias("_aid"),
-            F.col("anc").alias("_anc2"),
-            F.col("dist").alias("_d2"),
-            F.col("w").alias("_w2"),
-        )
-        nxt = (
-            cur.join(
-                look,
-                (F.col("anc") == F.col("_aid"))
-                & (F.col("trace_id") == F.col("_tid")),
-            )
-            .select(
-                "trace_id",
-                "id",
-                F.col("_anc2").alias("anc"),
-                (F.col("dist") + F.col("_d2")).alias("dist"),
-                (F.col("w") + F.col("_w2")).alias("w"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = nxt.agg(F.sum("dist")).collect()[0][0] or 0
-        cur = nxt
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    root_durs = base.select(
-        F.col("trace_id").alias("_rtid"),
-        F.col("id").alias("_rid"),
-        F.col("dur").alias("_rdur"),
-    )
-    return cur.join(
-        root_durs,
-        (F.col("anc") == F.col("_rid")) & (F.col("trace_id") == F.col("_rtid")),
-    ).select(
-        "trace_id",
-        "id",
-        (F.col("w") + F.col("_rdur")).alias("path_cost"),
-        F.col("dist").alias("depth"),
+def span_path_costs(spans: DataFrame) -> DataFrame:
+    """Root-to-span path cost: the sum of span durations along the
+    ancestry, endpoints inclusive, NULL durations counting 0; see
+    :func:`span_tree`.  Returns: trace_id, id, path_cost, depth."""
+    return span_tree(spans, path=False).select(
+        "trace_id", "id", "path_cost", "depth"
     )
 
 
@@ -435,8 +431,8 @@ def orphan_span_stats(spans: DataFrame, drop_hex: str = "0") -> DataFrame:
     sample — the dedup family's derived-snapshot pattern applied to
     trace quality), then count per service how many SURVIVING spans
     reference a parent that no longer exists.  This is the
-    data-quality panel behind the root-path sweep's orphan-drop
-    semantics (:func:`span_root_paths`): it quantifies how much of each
+    data-quality panel behind the span tree's orphan-drop semantics
+    (:func:`span_tree`): it quantifies how much of each
     service's tree would silently fall out.
 
     Columns: local_service, n_spans, n_orphans, orphan_rate (round4).
@@ -475,128 +471,17 @@ def orphan_span_stats(spans: DataFrame, drop_hex: str = "0") -> DataFrame:
     )
 
 
-def span_root_paths(spans: DataFrame, max_sweeps: int = 20) -> DataFrame:
-    """Per-span root-to-span SERVICE path ('>'-joined, root first) —
-    the ingest-time derivation behind route-level analytics (error
-    paths, route sampling), same family as :func:`span_path_costs`.
-
-    Same pointer-doubling skeleton as :func:`span_depths`, extended with
-    PATH accumulation: each span carries (ancestor, services-on-(anc,id]])
-    and every sweep splices the ancestor's own segment IN FRONT —
-    segment concatenation is associative, so doubling composes paths
-    exactly and convergence stays O(log max_depth) joins.  The root's
-    own service is deliberately NOT in the accumulator (its self-loop
-    would double it every sweep); it is prepended once at the end via
-    the roots join.  Orphan spans (unresolvable parents) drop out,
-    matching the recursive-CTE oracle which never reaches them.
-
-    Malformed parent chains are guarded (ADVICE r06): self-parent rows
-    (parent_id == id) are dropped up front, and each sweep drops rows
-    that became their own ancestor (anc == id at dist > 0 — even-length
-    cycles) or whose dist exceeded the max spans-per-trace bound (odd
-    cycles, whose doubling distance never lands on 0 mod cycle length).
-    Both classes are unreachable from any root, so the root-descending
-    recursive-CTE oracle never emits them either — and without the
-    guard they would double acc every sweep (exponential memory) while
-    pinning the convergence test open.  A NULL local_service anywhere
-    on the path NULL-propagates the whole root_path, matching the
-    oracle's ``||`` semantics (concat_ws would silently skip it).
-
-    Columns: trace_id, id, root_path.
-
-    Scale (100 TB): every sweep join is (trace_id, anc)-keyed — the
-    trace-co-partitioned shuffle every other trace stage shares; the
-    accumulator is bounded by path depth x service-name bytes; driver
-    reads ONE scalar per sweep.  Like span_path_costs, run once at
-    ingest and persist (sources.spans.root_paths_table).
+def span_root_paths(spans: DataFrame) -> DataFrame:
+    """Per-span root-to-span SERVICE path ('>'-joined, root first) — the
+    derivation behind route-level analytics (error paths, route sampling);
+    see :func:`span_tree` for the walk, the dropped spans and the NULL
+    rule.  Like path costs, it is built once at ingest and persisted
+    (sources.spans.root_paths_table).  Columns: trace_id, id, root_path.
     """
-    base = spans.select(
-        "trace_id", "id", "parent_id", "local_service"
-    ).filter(
-        F.col("parent_id").isNull() | (F.col("parent_id") != F.col("id"))
-    )
-    # Longest possible acyclic parent chain = spans in the trace; any
-    # row whose composed dist exceeds it is on a cycle.  One scalar.
-    depth_bound = (
-        base.groupBy("trace_id")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-        or 0
-    )
-    cur = base.select(
-        "trace_id",
-        "id",
-        F.coalesce("parent_id", "id").alias("anc"),
-        F.when(
-            F.col("parent_id").isNotNull(), F.array("local_service")
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("acc"),
-        F.when(F.col("parent_id").isNotNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("dist"),
-    ).localCheckpoint(eager=False)
-    prev_sum = cur.agg(F.sum("dist")).collect()[0][0] or 0
-    for _ in range(max_sweeps):
-        look = cur.select(
-            F.col("trace_id").alias("_tid"),
-            F.col("id").alias("_aid"),
-            F.col("anc").alias("_anc2"),
-            F.col("acc").alias("_acc2"),
-            F.col("dist").alias("_d2"),
-        )
-        nxt = (
-            cur.join(
-                look,
-                (F.col("anc") == F.col("_aid"))
-                & (F.col("trace_id") == F.col("_tid")),
-            )
-            .select(
-                "trace_id",
-                "id",
-                F.col("_anc2").alias("anc"),
-                F.concat(F.col("_acc2"), F.col("acc")).alias("acc"),
-                (F.col("dist") + F.col("_d2")).alias("dist"),
-            )
-            .filter(
-                (F.col("dist") == 0)
-                | (
-                    (F.col("anc") != F.col("id"))
-                    & (F.col("dist") <= F.lit(depth_bound))
-                )
-            )
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = nxt.agg(F.sum("dist")).collect()[0][0] or 0
-        cur = nxt
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    roots = base.filter(F.col("parent_id").isNull()).select(
-        "trace_id",
-        F.col("id").alias("anc"),
-        F.col("local_service").alias("_root_svc"),
-    )
-    full = F.concat(F.array("_root_svc"), F.col("acc"))
-    return cur.join(roots, ["trace_id", "anc"]).select(
-        "trace_id",
-        "id",
-        F.when(
-            F.exists(full, lambda x: x.isNull()),
-            F.lit(None).cast("string"),
-        )
-        .otherwise(F.concat_ws(">", full))
-        .alias("root_path"),
-    )
+    return span_tree(spans, cost=False).select("trace_id", "id", "root_path")
 
 
-def error_paths(
-    spans: DataFrame,
-    max_sweeps: int = 20,
-    paths: DataFrame | None = None,
-) -> DataFrame:
+def error_paths(spans: DataFrame, paths: DataFrame | None = None) -> DataFrame:
     """Root-to-error service paths, counted corpus-wide: for every ERROR
     span, the ordered chain of services from its trace root down to it —
     "which call path do failures concentrate on", the drill-down a
@@ -604,14 +489,14 @@ def error_paths(
     complement of z_service_error_rate, which loses the route).
 
     Pass a persisted ``paths`` relation (:func:`span_root_paths` /
-    sources.spans.root_paths_table) to skip the sweep — the serving
+    sources.spans.root_paths_table) to skip the tree walk — the serving
     shape: one error-span semi-join + a path-keyed rollup whose
     cardinality is the distinct failing-route count.
 
     Columns: error_path, n_errors.
     """
     if paths is None:
-        paths = span_root_paths(spans, max_sweeps)
+        paths = span_root_paths(spans)
     err = spans.filter(F.col("is_error")).select("trace_id", "id")
     return (
         paths.join(err, ["trace_id", "id"])

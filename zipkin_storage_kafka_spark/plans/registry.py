@@ -799,9 +799,8 @@ def q_slow_span_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_trace_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-count per tree depth (engine extension): read from the same
-    materialized pointer-doubling sweep as q_critical_path (the `depth`
-    column is the sweep's hop distance); the oracle walks the parent edges
-    with a recursive CTE."""
+    materialized span tree as q_critical_path; the oracle walks the parent
+    edges with a recursive CTE."""
     from zipkin_storage_kafka_spark.sources.spans import path_costs_table
 
     return (
@@ -1208,9 +1207,9 @@ def q_trace_idle_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-trace critical path (max root-to-span duration sum) over the
-    MATERIALIZED per-span path costs (the pointer-doubling sweep runs once
-    per code version, like the spans/links ingest derivations; see
-    sources.spans.path_costs_table).  The oracle accumulates the same
+    MATERIALIZED per-span path costs (the span tree is built once per code
+    version, like the spans/links ingest derivations; see
+    sources.spans.span_tree_table).  The oracle accumulates the same
     costs with a recursive CTE from the roots."""
     from zipkin_storage_kafka_spark.sources.spans import path_costs_table
 
@@ -1509,9 +1508,8 @@ def q_span_overhang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_error_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Root-to-error service paths, counted — where failures concentrate
     BY ROUTE (operators/trace_aggregation.py:error_paths): served from
-    the persisted root_paths table (path-accumulating pointer doubling
-    runs once at ingest, like path_costs), query = error semi-join +
-    route rollup."""
+    the persisted span tree's root paths (built once at ingest), query =
+    error semi-join + route rollup."""
     from zipkin_storage_kafka_spark.operators.trace_aggregation import (
         error_paths,
     )

@@ -42,7 +42,19 @@ _SPANS_CACHE: dict[tuple[int, str], DataFrame] = {}
 # Cross-process materialization (sources/matcache.py): the batch analog of
 # the reference's ingest-time materialized stores — spans/links/summaries
 # are derived once per code version and sf_dir, then every process reads
-# the parquet.
+# the parquet.  The fingerprint covers every package module the store
+# derivations import at module level (tests/test_materialize.py checks the
+# closure), so an edit to any of them rebuilds the stores.
+FINGERPRINT_MODULES = (
+    "functions.portable",
+    "functions.zipkin",
+    "operators.dependency_links",
+    "operators.trace_aggregation",
+    "sources.tables",
+    "sources.spans",
+)
+
+
 def _fingerprint() -> str:
     import importlib
 
@@ -50,12 +62,7 @@ def _fingerprint() -> str:
 
     mods = [
         importlib.import_module(f"zipkin_storage_kafka_spark.{m}")
-        for m in (
-            "operators.dependency_links",
-            "operators.trace_aggregation",
-            "sources.tables",
-            "sources.spans",
-        )
+        for m in FINGERPRINT_MODULES
     ]
     return matcache.code_fingerprint(mods)
 
@@ -294,50 +301,39 @@ def with_spans_cte(query_sql: str, extra_ctes: str = "") -> str:
     return f"WITH {ctes}\n{query_sql}"
 
 
-_PATH_COSTS_CACHE: dict[tuple[int, str], DataFrame] = {}
+_SPAN_TREE_CACHE: dict[tuple[int, str], DataFrame] = {}
+
+
+def span_tree_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized persisted per-span tree store — depth, path cost and root
+    path (operators.trace_aggregation.span_tree) — an ingest-time
+    derivation like spans/links: the trace-local walk runs once per code
+    version + sf_dir, and every depth, critical-path and route query reads
+    the parquet.  Columns: trace_id, id, depth, path_cost, root_path."""
+    key = (id(spark), sf_dir)
+    if key not in _SPAN_TREE_CACHE:
+        from zipkin_storage_kafka_spark.operators.trace_aggregation import (
+            span_tree,
+        )
+
+        _SPAN_TREE_CACHE[key] = _materialized(
+            spark,
+            sf_dir,
+            "span_tree",
+            lambda: span_tree(spans_table(spark, sf_dir)),
+        ).persist()
+    return _SPAN_TREE_CACHE[key]
 
 
 def path_costs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized persisted per-span (depth is its dist twin) path costs —
-    the pointer-doubling sweep (operators.trace_aggregation.
-    span_path_costs) is an ingest-time derivation like spans/links: run it
-    once per code version + sf_dir and let every depth/critical-path query
-    read the parquet instead of re-running O(log depth) join sweeps per
-    process."""
-    key = (id(spark), sf_dir)
-    if key not in _PATH_COSTS_CACHE:
-        from zipkin_storage_kafka_spark.operators.trace_aggregation import (
-            span_path_costs,
-        )
-
-        _PATH_COSTS_CACHE[key] = _materialized(
-            spark,
-            sf_dir,
-            "path_costs",
-            lambda: span_path_costs(spans_table(spark, sf_dir)),
-        ).persist()
-    return _PATH_COSTS_CACHE[key]
-
-
-_ROOT_PATHS_CACHE: dict[tuple[int, str], DataFrame] = {}
+    """Per-span path costs and depths, a projection of
+    :func:`span_tree_table`.  Columns: trace_id, id, path_cost, depth."""
+    return span_tree_table(spark, sf_dir).select(
+        "trace_id", "id", "path_cost", "depth"
+    )
 
 
 def root_paths_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized persisted per-span root->span service paths
-    (operators.trace_aggregation.span_root_paths) — the same ingest-time
-    discipline as :func:`path_costs_table`: the path-accumulating
-    pointer-doubling sweep runs once per code version + sf_dir; every
-    route-level query (error paths, route rollups) reads the parquet."""
-    key = (id(spark), sf_dir)
-    if key not in _ROOT_PATHS_CACHE:
-        from zipkin_storage_kafka_spark.operators.trace_aggregation import (
-            span_root_paths,
-        )
-
-        _ROOT_PATHS_CACHE[key] = _materialized(
-            spark,
-            sf_dir,
-            "root_paths",
-            lambda: span_root_paths(spans_table(spark, sf_dir)),
-        ).persist()
-    return _ROOT_PATHS_CACHE[key]
+    """Per-span root->span service paths, a projection of
+    :func:`span_tree_table`.  Columns: trace_id, id, root_path."""
+    return span_tree_table(spark, sf_dir).select("trace_id", "id", "root_path")
