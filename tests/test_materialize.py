@@ -5,6 +5,8 @@ from __future__ import annotations
 import ast
 import io
 import os
+import uuid
+import weakref
 from contextlib import redirect_stdout
 from pathlib import Path
 
@@ -431,3 +433,107 @@ def test_pq_and_semdedup_caches_keyed_on_operator_source(
         "ivf_nlist_assign",
     ):
         assert f"{table}-{fp}" in persisted, (table, sorted(persisted))
+
+
+def _jobs(spark, fn):
+    """Spark jobs ``fn()`` runs (counted by job group) and its result."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _cached_tables(root: str) -> set[str]:
+    return {d for _, ds, _ in os.walk(root) for d in ds}
+
+
+def test_one_split_tables_are_read_raw(spark, tmp_path, monkeypatch):
+    """Every sf0.001 table fits one split, so a copy would run in one task
+    as the raw scan does: load_table writes no ``wide_*`` table."""
+    from zipkin_storage_kafka_spark.sources import matcache, tables
+
+    root = str(tmp_path / "cache")
+    monkeypatch.setattr(matcache, "CACHE_ROOT", root)
+    monkeypatch.setattr(tables, "_READS", weakref.WeakKeyDictionary())
+    for name in tables.TABLES:
+        df = tables.load_table(spark, "/root/testdata/sf0.001", name)
+        assert df.inputFiles()[0].endswith(f"/sf0.001/{name}.parquet"), name
+    assert not [d for d in _cached_tables(root) if d.startswith("wide_")]
+
+
+def test_copy_only_when_row_groups_block_the_split(spark, tmp_path, monkeypatch):
+    """A one-row-group file that Spark plans as several splits is read
+    through a repartitioned copy; the same rows in as many row groups as
+    splits are read raw.  Both reads return the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zipkin_storage_kafka_spark.sources import matcache, tables
+
+    root = str(tmp_path / "cache")
+    monkeypatch.setattr(matcache, "CACHE_ROOT", root)
+    monkeypatch.setattr(tables, "_READS", weakref.WeakKeyDictionary())
+    session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    n = 3000
+    data = pa.table(
+        {"o_orderkey": list(range(n)), "o_comment": [f"comment {i}" for i in range(n)]}
+    )
+    one, many = tmp_path / "one", tmp_path / "many"
+    one.mkdir()
+    many.mkdir()
+    pq.write_table(data, one / "orders.parquet", row_group_size=n)
+    pq.write_table(data, many / "orders.parquet", row_group_size=50)
+
+    splits = session.read.parquet(str(one / "orders.parquet")).rdd.getNumPartitions()
+    assert splits >= 2
+    copied = tables.load_table(session, str(one), "orders")
+    assert [d for d in _cached_tables(root) if d.startswith("wide_orders-")]
+    assert all("/wide_orders-" in f for f in copied.inputFiles())
+
+    raw_path = str(many / "orders.parquet")
+    assert pq.ParquetFile(raw_path).metadata.num_row_groups >= (
+        session.read.parquet(raw_path).rdd.getNumPartitions()
+    )
+    raw = tables.load_table(session, str(many), "orders")
+    assert raw.inputFiles() == session.read.parquet(raw_path).inputFiles()
+    assert len(_cached_tables(root)) == 2  # the sf tag dir and the one copy
+    assert sorted(copied.collect()) == sorted(raw.collect())
+
+
+def test_second_table_read_runs_no_job(spark, sf_dir, monkeypatch):
+    """The first read of a table infers its schema (one Spark job); every
+    later read in the session is served from the memo."""
+    from zipkin_storage_kafka_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_READS", weakref.WeakKeyDictionary())
+    first, df = _jobs(spark, lambda: tables.load_table(spark, sf_dir, "nation"))
+    again, df2 = _jobs(spark, lambda: tables.load_table(spark, sf_dir, "nation"))
+    assert first >= 1
+    assert again == 0
+    assert df2.schema == df.schema
+
+
+def test_matcache_build_reads_back_with_known_schema(spark, tmp_path, monkeypatch):
+    """The build path returns the schema Spark infers from the written
+    files and runs no job beyond the write itself."""
+    from zipkin_storage_kafka_spark.sources import matcache
+
+    monkeypatch.setattr(matcache, "CACHE_ROOT", str(tmp_path / "cache"))
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+
+    def build():
+        return spark.range(4).selectExpr("id AS v", "CAST(id AS STRING) AS s")
+
+    write_only, _ = _jobs(
+        spark, lambda: build().write.mode("overwrite").parquet(str(tmp_path / "w"))
+    )
+    jobs, df = _jobs(spark, lambda: matcache.materialized(spark, src, "t", "fp", build))
+    assert jobs == write_only
+    assert df.schema == spark.read.parquet(*df.inputFiles()).schema
+    assert sorted(df.collect()) == sorted(build().collect())

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from zipkin_storage_kafka_spark.functions.portable import round4
+from zipkin_storage_kafka_spark.operators.text_analysis import spread
 
 SIGN_BITS = 8
 
@@ -384,16 +385,18 @@ def kmeans_step(embeddings: DataFrame, k: int = KMEANS_K) -> DataFrame:
     dot-product parity path uses; assignment ranks on the ROUNDED distance
     with seed_id as tie-break, so ulp noise cannot flip an argmin.
 
-    Shape: the seed table is k rows -> broadcast cross join (no shuffle of
-    the corpus side); assignment is a rowwise argmin; the recompute is one
-    (seed, dim)-keyed partial agg whose shuffle width is k x dims rows
-    regardless of corpus size.  The full training loop (pytest-pinned)
-    re-runs this step on the PREVIOUS step's output with lineage truncated
-    per round (see ``connected_components`` for why).
+    Shape: the seed table is k rows -> broadcast cross join (no keyed
+    shuffle of the corpus side; ``spread`` round-robins an input that
+    arrives in fewer partitions than cores); assignment is a rowwise
+    argmin; the recompute is one (seed, dim)-keyed partial agg whose
+    shuffle width is k x dims rows regardless of corpus size.  The full
+    training loop (pytest-pinned) re-runs this step on the PREVIOUS
+    step's output with lineage truncated per round (see
+    ``connected_components`` for why).
 
     Output: seed_id, dim (1-based), n_members, c (round 4).
     """
-    e = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    e = spread(embeddings).select("vec_id", _as_double("embedding").alias("v"))
     seeds = (
         e.orderBy("vec_id")
         .limit(k)
@@ -577,12 +580,14 @@ def pq_encode(
 
     Shape: codebook is m x k tiny rows -> broadcast; the corpus side is
     one rowwise explode to (vec, subspace) and a per-(vec, subspace)
-    argmin — no corpus shuffle at all until a consumer aggregates.
+    argmin — no keyed corpus shuffle until a consumer aggregates
+    (``spread`` round-robins an input that arrives in fewer partitions
+    than cores).
 
     Output: vec_id, m (0-based subspace), code (codebook row id),
     d2 (round-4 subspace reconstruction error).
     """
-    e = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    e = spread(embeddings).select("vec_id", _as_double("embedding").alias("v"))
     sub = _pq_subvectors(e, m)
     codebook = _pq_codebook(e, m, k)
     d2 = round4(
@@ -2509,7 +2514,7 @@ def simplified_silhouette(
     """
     from pyspark.sql import Window
 
-    scores = _centroid_scores(embeddings, centroids)
+    scores = _centroid_scores(spread(embeddings), centroids)
     w = Window.partitionBy("vec_id").orderBy(
         F.col("s").desc(), F.col("label")
     )

@@ -482,7 +482,7 @@ def repetition_stats(docs: DataFrame, gram: int = 3) -> DataFrame:
     Output: doc_id, n_tokens, dup_word_ratio, top_word_ratio,
     dup_gram_ratio.
     """
-    d = docs.select("doc_id", F.split("text", " ").alias("w"))
+    d = spread(docs).select("doc_id", F.split("text", " ").alias("w"))
     n = F.size("w").cast("long")
     nd = F.size(F.array_distinct("w")).cast("long")
     sorted_w = F.array_sort("w")

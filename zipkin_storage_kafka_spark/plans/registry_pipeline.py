@@ -1307,9 +1307,25 @@ def q_pipe_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same docs: doc_id%5==0 re-ingested verbatim under a new id
     (exact_dup), %5==1 lightly edited (near_dup when LSH band minima
     survive the edit — both engines compute the identical band math),
-    %5==2 replaced by fresh md5-derived text (new)."""
-    new = dd.derived_new_snapshot(_docs(spark, sf_dir))
-    return dd.incremental_dedup(_dedup_index(spark, sf_dir), new)
+    %5==2 replaced by fresh md5-derived text (new).  The snapshot is
+    persisted like the index (``_new_snapshot``): a deployment's new
+    snapshot arrives as its own files, so the serving plan scans neither
+    corpus's raw documents."""
+    return dd.incremental_dedup(
+        _dedup_index(spark, sf_dir), _new_snapshot(spark, sf_dir)
+    )
+
+
+def _new_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from zipkin_storage_kafka_spark.sources import matcache
+
+    return matcache.materialized(
+        spark,
+        sf_dir,
+        "new_snapshot",
+        _pipe_fingerprint(),
+        lambda: dd.derived_new_snapshot(_docs(spark, sf_dir)),
+    )
 
 
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

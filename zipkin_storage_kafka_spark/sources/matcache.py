@@ -100,7 +100,8 @@ def materialized(
                     if age >= _PRUNE_GRACE_SECONDS:
                         shutil.rmtree(stale, ignore_errors=True)
         tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-        build().write.mode("overwrite").parquet(tmp)
+        built = build()
+        built.write.mode("overwrite").parquet(tmp)
         try:
             os.rename(tmp, path)
         except OSError:
@@ -108,4 +109,8 @@ def materialized(
             shutil.rmtree(tmp, ignore_errors=True)
             if not os.path.exists(success):
                 raise
+        # The build's schema is the one Spark would infer from the files it
+        # just wrote (file sources read every column as nullable), so the
+        # read-back skips the schema-inference job.
+        return spark.read.schema(built.schema).parquet(path)
     return spark.read.parquet(path)

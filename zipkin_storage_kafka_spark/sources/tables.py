@@ -9,6 +9,7 @@ partitioned by date, with partition pruning driven by query filters.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,47 +62,57 @@ def _ensure_reader_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
 
 
-# Tables big enough that a single-file, single-row-group layout (the driver
-# testdata ships exactly that) serializes every scan's map-side work on one
-# core.  For these, load_table transparently reads a once-materialized
-# repartitioned copy — the batch analog of an ingest job writing
-# properly-sized files.  Dim tables stay raw (broadcast anyway).
-_WIDE_TABLES = ("lineitem", "orders", "events", "documents", "embeddings")
-
-_WIDE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# Every table read of a session, keyed on the file's path, size and mtime
+# so a rewritten file is read again.  Each read without a schema runs one
+# schema-inference Spark job; the memo pays it once per table per session.
+_READS: weakref.WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]] = (
+    weakref.WeakKeyDictionary()
+)
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = True
-) -> DataFrame:
+def _row_groups_block_split(path: str, raw: DataFrame) -> bool:
+    """True when a single parquet file has fewer row groups than the
+    byte-range splits Spark plans for it.  A parquet file parallelizes at
+    row-group granularity, so the splits past the row-group count read
+    nothing and the whole scan's map-side work runs on that many cores."""
+    if not os.path.isfile(path):
+        return False
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_row_groups < raw.rdd.getNumPartitions()
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The raw parquet scan of ``name``, or, when its row groups block
+    Spark's own split (``_row_groups_block_split``), a once-materialized
+    copy repartitioned to ``defaultParallelism`` — the batch analog of an
+    ingest job writing properly-sized files.  The copy is shared across
+    processes through matcache; every other input (small files, files
+    with many row groups, directories) is read as it is."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     _ensure_reader_confs(spark)
-    raw = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if not wide or name not in _WIDE_TABLES:
-        return raw
-    # A parquet file parallelizes at ROW GROUP granularity; the testdata
-    # ships one row group per table, so byte-range splitting cannot help —
-    # only a rewritten copy can.  Materialized once per (data, code)
-    # fingerprint via matcache, shared across processes; no-op when the
-    # raw scan is already wide (the 100 TB case).
-    target = spark.sparkContext.defaultParallelism
-    if raw.rdd.getNumPartitions() >= min(4, target):
-        return raw
-    import sys
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+    reads = _READS.setdefault(spark, {})
+    if key not in reads:
+        df = raw = spark.read.parquet(path)
+        if _row_groups_block_split(path, raw):
+            import sys
 
-    from zipkin_storage_kafka_spark.sources import matcache
+            from zipkin_storage_kafka_spark.sources import matcache
 
-    key = (id(spark), sf_dir, name)
-    if key not in _WIDE_CACHE:
-        _WIDE_CACHE[key] = matcache.materialized(
-            spark,
-            sf_dir,
-            f"wide_{name}",
-            matcache.code_fingerprint([sys.modules[__name__]]),
-            lambda: raw.repartition(target),
-        )
-    return _WIDE_CACHE[key]
+            target = spark.sparkContext.defaultParallelism
+            df = matcache.materialized(
+                spark,
+                sf_dir,
+                f"wide_{name}",
+                matcache.code_fingerprint([sys.modules[__name__]]),
+                lambda: raw.repartition(target),
+            )
+        reads[key] = df
+    return reads[key]
 
 
 def to_epoch_micros(df, col_name: str):
